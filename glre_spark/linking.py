@@ -1,8 +1,8 @@
 """Entity linking & canonicalization (SURVEY.md §2.12).
 
 Relational stages downstream of inference: name normalization, (salted)
-broadcast alias-dictionary join, MinHash signatures + LSH banding in pure
-SQL functions, candidate-pair self-join, connected components, canonical
+broadcast alias-dictionary join, near-duplicate name clustering (blocked
+by the shared glre_spark.minhash stack), connected components, canonical
 naming, triple dedup. All built-in DataFrame ops — no Python in the path.
 """
 
@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from glre_spark import minhash as mh
 
 # ---------------------------------------------------------------------------
 # Normalization (str_normalize §2.8)
@@ -68,66 +70,6 @@ def link_aliases_salted(
         "entity_key",
         F.coalesce(F.col("entity_key"), F.concat(F.lit("S"), F.md5("alias_norm"))),
     ).withColumn("canonical_name", F.coalesce(F.col("canonical_name"), F.col(name_col)))
-
-
-# ---------------------------------------------------------------------------
-# MinHash + LSH blocking (minhash_sig / lsh_band / join_self_block)
-# Pure SQL expressions — md5 is the hash family (stable across engines; the
-# DuckDB oracle computes the identical signatures, SURVEY.md §2.12).
-# ---------------------------------------------------------------------------
-
-MINHASH_K = 8          # signature length
-LSH_BANDS = 4          # bands of r = K/BANDS rows
-SHINGLE_K = 3
-
-
-def shingles(col, k: int = SHINGLE_K):
-    """Character k-shingles via a higher-order function (str_shingle §2.8)."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(col) - (k - 1), F.lit(1))),
-            lambda i: col.substr(i, F.lit(k)),
-        )
-    )
-
-
-def _seed_hash(i: int):
-    # One-arg lambda required: F.transform treats (x, i) as (element, index).
-    return lambda x: F.md5(F.concat(x, F.lit(f":{i}")))
-
-
-def minhash_signature(shingle_col, k: int = MINHASH_K):
-    """array of k min-hashes; hash_i(x) = md5(x || ':' || i), min taken
-    lexicographically over hex strings — a valid deterministic hash family."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingle_col, _seed_hash(i))).alias(f"mh{i}")
-            for i in range(k)
-        ]
-    )
-
-
-def lsh_bands(sig_col, bands: int = LSH_BANDS, k: int = MINHASH_K):
-    """signature → array of band hashes (md5 of the concatenated rows)."""
-    r = k // bands
-    return F.array(
-        *[
-            F.md5(F.concat_ws("|", *[sig_col.getItem(b * r + j) for j in range(r)]))
-            for b in range(bands)
-        ]
-    )
-
-
-def candidate_pairs(keys: DataFrame, id_col: str, band_col: str = "band") -> DataFrame:
-    """Self-join within LSH buckets, a.id < b.id (join_self_block §2.3)."""
-    a = keys.select(F.col(id_col).alias("id_a"), F.col(band_col).alias("b"))
-    b = keys.select(F.col(id_col).alias("id_b"), F.col(band_col).alias("b"))
-    return (
-        a.join(b, "b")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -207,8 +149,9 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
 # canonical name per cluster.
 # ---------------------------------------------------------------------------
 
-MAX_LSH_BLOCK = 64  # cap candidate-block size; oversized blocks are logged
-                    # and dropped (quadratic pair blowup guard, SURVEY M4)
+# Names band with r=2 (4 bands): short strings need it for recall at
+# Jaccard 0.85 (P(candidate) = 1 - (1 - J^2)^4 ≈ 0.994 there).
+NAME_ROWS_PER_BAND = 2
 
 
 def cluster_names(
@@ -216,12 +159,13 @@ def cluster_names(
     name_col: str = "name",
     weight_col: str | None = None,
     jaccard_threshold: float = 0.85,
-    max_block: int = MAX_LSH_BLOCK,
+    max_block: int = mh.MAX_LSH_BLOCK,
 ) -> DataFrame:
     """(name [, weight]) → (name, cluster_name) mapping for near-duplicate
-    names. Pure DataFrame ops: shingle → MinHash → LSH bands → capped
-    block self-join → Jaccard verify → connected components (by hashed
-    name id) → canonical pick (max weight, tie → lexicographic).
+    names. Pure DataFrame ops over the shared glre_spark.minhash stack:
+    shingle → MinHash → LSH bands → capped block self-join → Jaccard
+    verify → connected components (by hashed name id) → canonical pick
+    (max weight, tie → lexicographic).
 
     Node ids are xxhash64(name): fully parallel (a dense_rank over a
     global no-partition window would funnel every distinct name through
@@ -233,27 +177,13 @@ def cluster_names(
     )
     ided = w.withColumn(
         "_id", F.xxhash64(F.col(name_col))
-    ).withColumn("_sh", shingles(norm_name(F.col(name_col))))
-    sig = ided.withColumn("_sig", minhash_signature(F.col("_sh")))
-    bands = sig.select(
-        "_id", "_sh", F.explode(lsh_bands(F.col("_sig"))).alias("band")
-    )
-    # block-size cap
-    sizes = bands.groupBy("band").agg(F.count("*").alias("bn"))
-    bands = bands.join(
-        F.broadcast(sizes.filter(F.col("bn") <= max_block).select("band")), "band"
-    )
-    a = bands.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"), "band")
-    b = bands.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"), "band")
+    ).withColumn("_sh", mh.shingles(norm_name(F.col(name_col))))
+    hs = ided.select("_id", "_sh", mh.shingle_hashes(F.col("_sh")).alias("_hs"))
+    sig = hs.select("_id", "_sh", *mh.signature(F.col("_hs")))
+    bands = mh.lsh_bands(sig, NAME_ROWS_PER_BAND, id_col="_id", carry="_sh")
     pairs = (
-        a.join(b, "band")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "_j",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("_j") >= jaccard_threshold)
+        mh.capped_pairs(bands, id_col="_id", carry="_sh", max_block=max_block)
+        .filter(mh.jaccard("_sh_a", "_sh_b") >= jaccard_threshold)
         .select("id_a", "id_b")
         .distinct()
     )

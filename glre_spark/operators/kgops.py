@@ -2,9 +2,9 @@
 large-scale training-data ops (dedup families, ANN similarity) — each with
 a DuckDB twin where SQL-expressible, rows-only otherwise.
 
-MinHash/LSH use md5 as the hash family (stable across engines; min taken
-lexicographically over hex digests — SURVEY.md §2.12) so the oracle can
-compute bit-identical signatures.
+MinHash/LSH come from glre_spark.minhash, whose md5 base hash + integer
+permutations are stable across engines (SURVEY.md §2.12), so the oracle
+computes bit-identical signatures, bands and candidates.
 """
 
 from __future__ import annotations
@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from glre_spark import minhash as mh
 from glre_spark.operators import fan_out, fround, load, op
 
 # ---------------------------------------------------------------------------
@@ -71,241 +72,43 @@ def link_alias_broadcast(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH over documents (minhash_sig / lsh_band / lsh_candidates)
+# MinHash + LSH over documents (minhash_sig / lsh_band / lsh_candidates),
+# all through the shared glre_spark.minhash stack at r = DOC_ROWS_PER_BAND
 # ---------------------------------------------------------------------------
-
-_K = 8      # signature length
-_BANDS = 2  # bands of r=4: high-precision blocking — r=2 floods the
-            # candidate set on vocabulary-sharing corpora (measured 18.8 s
-            # of self-join at 500 docs; quadratic at web scale)
-_R = _K // _BANDS
-
-# MinHash family: ONE md5 per shingle (28-bit base hash from the first 7
-# hex chars) + K integer permutations h_i = (A_i·h + B_i) mod P. 8× fewer
-# md5 calls than hashing per-seed (the signature stage is md5-bound), and
-# every step is exact int64 arithmetic both engines agree on (A·h + B <
-# 2^59, no overflow under ANSI mode). P = 2^31-1 (Mersenne prime).
-_P = 2147483647
-_A = [1103515245, 1225577, 747796405, 2027382, 1664525, 22695477, 65793, 100005713]
-_B = [12345, 987654321, 69069, 8121, 1013904223, 1, 377003613, 55555]
-
-_SHINGLE_CTE = """sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id,
-         CAST(concat('0x', substr(md5(s), 1, 7)) AS BIGINT) AS h
-  FROM (SELECT doc_id, substr(text, CAST(i AS INTEGER), 3) AS s
-        FROM (SELECT doc_id, text,
-                     UNNEST(range(1, greatest(length(text) - 1, 2))) AS i
-              FROM documents))
-)"""
-
-_SIG_CTE = (
-    _SHINGLE_CTE
-    + """,
-sig AS MATERIALIZED (
-  SELECT doc_id, """
-    + ", ".join(f"min(({_A[i]} * h + {_B[i]}) % {_P}) AS mh{i}" for i in range(_K))
-    + """
-  FROM sh GROUP BY doc_id
-)"""
-)
-
-
-def _shingle_col(c, k: int = 3):
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(c) - (k - 1), F.lit(1))),
-            lambda i: c.substr(i, F.lit(k)),
-        )
-    )
-
-
-def _shingle_hash_col(c, k: int = 3):
-    """Distinct k-shingles → 28-bit base hashes (one md5 per shingle)."""
-    return F.transform(
-        _shingle_col(c, k),
-        lambda x: F.conv(F.md5(x).substr(1, 7), 16, 10).cast("bigint"),
-    )
-
-
-def _perm_hash(i: int):
-    # NB: must return a ONE-arg lambda — F.transform interprets a two-arg
-    # lambda as (element, index), which would silently shadow the seed.
-    a, b = F.lit(_A[i]).cast("bigint"), F.lit(_B[i]).cast("bigint")
-    return lambda h: F.pmod(a * h + b, F.lit(_P).cast("bigint"))
-
-
-def _sig_of(docs):
-    """MinHash signature of an arbitrary (doc_id, text) DataFrame."""
-    hs = docs.select("doc_id", _shingle_hash_col(F.col("text")).alias("hs"))
-    return hs.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("hs"), _perm_hash(i))).alias(f"mh{i}")
-            for i in range(_K)
-        ],
-    )
 
 
 def _sig_df(spark, sf_dir):
     # fan_out: the signature expression is the family's CPU wall; a
     # single-row-group scan would otherwise run it on 1-2 tasks
-    return _sig_of(fan_out(load(spark, sf_dir, "documents").select("doc_id", "text")))
+    docs = fan_out(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    hs = docs.select("doc_id", mh.shingle_hashes(mh.shingles(F.col("text"))).alias("hs"))
+    return hs.select("doc_id", *mh.signature(F.col("hs")))
 
 
-@op("minhash_sig", "WITH " + _SIG_CTE + " SELECT * FROM sig")
+@op("minhash_sig", "WITH " + mh.SIG_CTE + " SELECT * FROM sig")
 def minhash_sig(spark, sf_dir):
     return _sig_df(spark, sf_dir)
 
 
-_BAND_SELECTS = " UNION ALL ".join(
-    "SELECT doc_id, CAST({b} AS BIGINT) AS band_id, md5({parts}) AS band_hash FROM sig".format(
-        b=b,
-        parts=" || '|' || ".join(
-            f"CAST(mh{b * _R + j} AS VARCHAR)" for j in range(_R)
-        ),
-    )
-    for b in range(_BANDS)
-)
-
-
-def _bands_of_sig(sig):
-    """Signature → one (doc_id, band_id, band_hash) row per LSH band."""
-    bands = F.array(
-        *[
-            F.md5(F.concat_ws("|", *[F.col(f"mh{b * _R + j}") for j in range(_R)]))
-            for b in range(_BANDS)
-        ]
-    )
-    return sig.select(
-        "doc_id", F.posexplode(bands).alias("band_id", "band_hash")
-    ).select("doc_id", F.col("band_id").cast("bigint"), "band_hash")
-
-
-@op("lsh_band", "WITH " + _SIG_CTE + " " + _BAND_SELECTS)
+@op("lsh_band", "WITH " + mh.SIG_CTE + " " + mh.BAND_SELECTS)
 def lsh_band(spark, sf_dir):
-    return _bands_of_sig(_sig_df(spark, sf_dir))
+    return mh.lsh_bands(_sig_df(spark, sf_dir), mh.DOC_ROWS_PER_BAND)
 
 
-MAX_LSH_BLOCK = 64  # block-size cap: one hot band bucket would otherwise go
-                    # quadratic in the self-join (cartesian bomb at web
-                    # scale); oversized blocks are dropped, as in
-                    # linking.cluster_names
-
-_CAND_CTES = (
-    _SIG_CTE
-    + """,
-bands AS MATERIALIZED ("""
-    + _BAND_SELECTS
-    + f"""),
-sized AS MATERIALIZED (
-  SELECT band_id, band_hash FROM bands
-  GROUP BY band_id, band_hash HAVING COUNT(*) <= {MAX_LSH_BLOCK}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a
-  JOIN sized s ON a.band_id = s.band_id AND a.band_hash = s.band_hash
-  JOIN bands b ON a.band_hash = b.band_hash AND a.band_id = b.band_id
-  WHERE a.doc_id < b.doc_id
-)"""
-)
+def band_table(spark, sf_dir):
+    """The documents' band table, materialized: the signature expression
+    (all shingles × 8 permutations) dominates, and the bucket-size cap
+    reads the table twice (sizes, then the capped rows). On a cluster
+    this is "write the signature table, then join"; localCheckpoint is
+    the local analog."""
+    return lsh_band(spark, sf_dir).localCheckpoint(eager=True)
 
 
-# One-entry memo shared by the dedup family (lsh_candidates,
-# dedup_ngram_jaccard, udf_grouped_map all start from the same capped band
-# table): keyed on (application, sf_dir, input fingerprint, cap) so a new
-# session, a different input dir, OR an overwritten documents.parquet under
-# the same path recomputes (the fingerprint folds the parquet file names,
-# sizes and mtimes). The evicted epoch's checkpoint blocks are released by
-# the ContextCleaner once the old DataFrame is unreferenced (localCheckpoint
-# RDDs are not in the SQL cache manager, so there is no explicit
-# DataFrame-level unpersist for them).
-_BANDS_CACHE: dict[tuple, object] = {}
-
-
-_FINGERPRINT_EPOCH = 0  # bumped per call for non-local paths → cache miss
-
-
-def _input_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
-    """Cheap content fingerprint of a parquet table: (name, size, mtime_ns)
-    of every data file. Catches same-path overwrites within one Spark app
-    without reading any data. LOCAL filesystem only: for a URI-scheme path
-    (hdfs://, s3a://, …) os.stat can't see the files, every file would
-    fingerprint as (-1, -1) and a same-path overwrite would silently hit
-    the stale cache — so such paths get a never-matching epoch token
-    (cache effectively disabled; a cluster deployment would fold in a
-    Hadoop FileSystem listing instead)."""
-    import os
-    import re
-
-    if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", sf_dir):
-        global _FINGERPRINT_EPOCH
-        _FINGERPRINT_EPOCH += 1
-        return ("__non_local_path__", _FINGERPRINT_EPOCH)
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f) for f in os.listdir(path) if not f.startswith(".")
-        )
-    else:
-        files = [path]
-    out = []
-    for f in files:
-        try:
-            st = os.stat(f)
-            out.append((os.path.basename(f), st.st_size, st.st_mtime_ns))
-        except OSError:
-            out.append((os.path.basename(f), -1, -1))
-    return tuple(out)
-
-
-def capped_bands(spark, sf_dir, max_block: int = MAX_LSH_BLOCK):
-    """Size-capped LSH band table (doc_id, band_id, band_hash), materialized
-    ONCE per (session, input): the minhash signature expression
-    (all-shingles × 8 permutations) dominates, and every downstream
-    consumer (self-join, pairwise verify, grouped-map) would otherwise
-    recompute it. On a cluster this is "write the signature table, then
-    join" — localCheckpoint is the local analog."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _input_fingerprint(sf_dir),
-        max_block,
-    )
-    hit = _BANDS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    bands = lsh_band(spark, sf_dir).localCheckpoint(eager=True)
-    sizes = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("bn"))
-    capped = bands.join(
-        F.broadcast(
-            sizes.filter(F.col("bn") <= max_block).select("band_id", "band_hash")
-        ),
-        ["band_id", "band_hash"],
-    )
-    _BANDS_CACHE.clear()
-    _BANDS_CACHE[key] = capped
-    return capped
-
-
-def _capped_candidates(spark, sf_dir, max_block: int = MAX_LSH_BLOCK):
-    bands = capped_bands(spark, sf_dir, max_block)
-    a = bands.select(F.col("doc_id").alias("id_a"), "band_id", "band_hash")
-    b = bands.select(F.col("doc_id").alias("id_b"), "band_id", "band_hash")
-    return (
-        a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-@op("lsh_candidates", "WITH " + _CAND_CTES + " SELECT id_a, id_b FROM cand")
+@op("lsh_candidates", "WITH " + mh.CAND_CTES + " SELECT id_a, id_b FROM cand")
 def lsh_candidates(spark, sf_dir):
     """Candidate near-dup pairs = documents sharing an LSH band bucket,
     bucket size capped at MAX_LSH_BLOCK (skew guard)."""
-    return _capped_candidates(spark, sf_dir)
+    return mh.capped_pairs(band_table(spark, sf_dir)).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -452,10 +255,11 @@ def dedup_exact(spark, sf_dir):
     )
 
 
-@op(
-    "dedup_ngram_jaccard",
+# Exact 3-gram Jaccard over the capped candidate pairs — the oracle side of
+# dedup_ngram_jaccard, also udfops.udf_grouped_map's twin
+JACCARD_SQL = (
     "WITH "
-    + _CAND_CTES
+    + mh.CAND_CTES
     + """,
 d AS MATERIALIZED (
   SELECT doc_id,
@@ -469,13 +273,12 @@ SELECT c.id_a, c.id_b,
              / len(list_distinct(list_concat(da.sh, db.sh))) + 1e-9, 4) + 0 AS jaccard
 FROM cand c
 JOIN d da ON da.doc_id = c.id_a
-JOIN d db ON db.doc_id = c.id_b""",
+JOIN d db ON db.doc_id = c.id_b"""
 )
-def dedup_ngram_jaccard(spark, sf_dir):
-    """Exact 3-gram Jaccard verify over the (capped) LSH candidate pairs —
-    the verify step is bounded by candidate count, never by block size.
-    (An earlier version blocked on exact n_chars equality: real near-dups
-    rarely share exact length while boilerplate corpora flood the block.)
+
+
+def _scored_pairs(spark, sf_dir):
+    """(id_a, id_b, j): exact 3-gram Jaccard of every capped candidate pair.
 
     Spark side intersects xxhash64-hashed shingles (8-byte longs) instead
     of 3-char strings: ~2.5× less shuffle through the pair join, identical
@@ -483,23 +286,26 @@ def dedup_ngram_jaccard(spark, sf_dir):
     oracle intersects the string sets directly."""
     d = fan_out(load(spark, sf_dir, "documents").select("doc_id", "text")).select(
         "doc_id",
-        F.transform(_shingle_col(F.col("text")), lambda x: F.xxhash64(x)).alias("sh"),
+        F.transform(mh.shingles(F.col("text")), lambda x: F.xxhash64(x)).alias("sh"),
     )
-    cand = _capped_candidates(spark, sf_dir)
     da = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     db = d.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     return (
-        cand.join(da, "id_a")
+        lsh_candidates(spark, sf_dir)
+        .join(da, "id_a")
         .join(db, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            fround(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ).alias("jaccard"),
-        )
+        .select("id_a", "id_b", mh.jaccard("sh_a", "sh_b").alias("j"))
+    )
+
+
+@op("dedup_ngram_jaccard", JACCARD_SQL)
+def dedup_ngram_jaccard(spark, sf_dir):
+    """Exact 3-gram Jaccard verify over the (capped) LSH candidate pairs —
+    the verify step is bounded by candidate count, never by block size.
+    (An earlier version blocked on exact n_chars equality: real near-dups
+    rarely share exact length while boilerplate corpora flood the block.)"""
+    return _scored_pairs(spark, sf_dir).select(
+        "id_a", "id_b", fround(F.col("j"), 4).alias("jaccard")
     )
 
 
@@ -509,7 +315,7 @@ _KEEPER_TAU = 0.8  # classic near-dup Jaccard threshold
 @op(
     "dedup_keeper_table",
     "WITH RECURSIVE "
-    + _CAND_CTES
+    + mh.CAND_CTES
     + f""",
 d AS MATERIALIZED (
   SELECT doc_id,
@@ -557,23 +363,7 @@ def dedup_keeper_table(spark, sf_dir):
     sizes whp), so no rounding convention is needed."""
     from glre_spark.linking import connected_components
 
-    d = fan_out(load(spark, sf_dir, "documents").select("doc_id", "text")).select(
-        "doc_id",
-        F.transform(_shingle_col(F.col("text")), lambda x: F.xxhash64(x)).alias("sh"),
-    )
-    cand = _capped_candidates(spark, sf_dir)
-    da = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    db = d.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    ver = (
-        cand.join(da, "id_a")
-        .join(db, "id_b")
-        .filter(
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b"))
-            >= _KEEPER_TAU
-        )
-        .select("id_a", "id_b")
-    )
+    ver = _scored_pairs(spark, sf_dir).filter(F.col("j") >= _KEEPER_TAU).select("id_a", "id_b")
     comps = connected_components(ver)
     docs = load(spark, sf_dir, "documents").select("doc_id")
     return docs.join(comps, docs.doc_id == comps.id, "left").select(
@@ -586,11 +376,11 @@ def dedup_keeper_table(spark, sf_dir):
 
 
 def near_dup_keepers(
-    docs, tau: float = _KEEPER_TAU, max_block: int = MAX_LSH_BLOCK,
+    docs, tau: float = _KEEPER_TAU, max_block: int = mh.MAX_LSH_BLOCK,
     sketch_k: int | None = None, check_ids: bool = True,
 ):
     """dedup_keeper_table's decision generalized to an ARBITRARY
-    (doc_id bigint, text string) DataFrame — no sf_dir, no cache — so the
+    (doc_id bigint, text string) DataFrame — no sf_dir — so the
     flagship pipeline can compose it below its inference stage
     (pipeline.build_triples(drop_near_dups=True)). Same machinery end to
     end: MinHash → capped LSH blocks → Jaccard ≥ τ verify → connected
@@ -635,35 +425,16 @@ def near_dup_keepers(
             )
     hs = docs.select(
         "doc_id",
-        F.array_distinct(_shingle_hash_col(F.col("text"))).alias("hs"),
+        F.array_distinct(mh.shingle_hashes(mh.shingles(F.col("text")))).alias("hs"),
     )
     if sketch_k:
         # one shingle-hash pass feeds both signatures and sketches (the
         # local analog of "write the signature table once, then join")
         hs = hs.localCheckpoint(eager=True)
-    sig = hs.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("hs"), _perm_hash(i))).alias(f"mh{i}")
-            for i in range(_K)
-        ],
-    )
-    bands = _bands_of_sig(sig)
-    sized = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("bn"))
-    capped = bands.join(
-        F.broadcast(
-            sized.filter(F.col("bn") <= max_block).select("band_id", "band_hash")
-        ),
-        ["band_id", "band_hash"],
-    )
-    a = capped.select(F.col("doc_id").alias("id_a"), "band_id", "band_hash")
-    b = capped.select(F.col("doc_id").alias("id_b"), "band_id", "band_hash")
-    cand = (
-        a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    sig = hs.select("doc_id", *mh.signature(F.col("hs")))
+    cand = mh.capped_pairs(
+        mh.lsh_bands(sig, mh.DOC_ROWS_PER_BAND), max_block=max_block
+    ).distinct()
     # Exact-content star candidates: byte-identical docs (the web's
     # dominant duplication mode — mirrors) grouped by md5(text) and paired
     # to the group's min doc_id. An exact-dup group is an equivalence
@@ -709,10 +480,7 @@ def near_dup_keepers(
         denom = F.least(F.lit(sketch_k), F.size(F.array_union("sh_a", "sh_b")))
         jac = F.size(F.array_intersect(both, union_k)).cast("double") / denom
     else:
-        jac = (
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            / F.size(F.array_union("sh_a", "sh_b"))
-        )
+        jac = mh.jaccard("sh_a", "sh_b")
     ver = paired.filter(jac >= tau).select("id_a", "id_b")
     comps = connected_components(ver)
     ids = docs.select("doc_id")
@@ -731,7 +499,7 @@ _SKETCH_K = 256  # bottom-k (KMV) sketch size for the scale-shaped verify
 @op(
     "dedup_keeper_sketch",
     "WITH RECURSIVE "
-    + _CAND_CTES
+    + mh.CAND_CTES
     + f""",
 ex AS (SELECT doc_id, md5(text) AS cx FROM documents),
 exmin AS (

@@ -9,6 +9,12 @@ CTE below). The html column is only present in the synthesized corpus
 
 from __future__ import annotations
 
+import hashlib
+import os
+import re
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -109,6 +115,33 @@ def filter_len(spark, sf_dir):
     )
 
 
+def _input_fingerprint(spark, sf_dir: str) -> tuple:
+    """Cheap content fingerprint of documents.parquet: (name, size, mtime_ns)
+    of every data file, so a same-path overwrite gets a new key without
+    reading any data. LOCAL filesystem only: os.stat cannot see a
+    URI-scheme path (hdfs://, s3a://, …), so such a path is keyed on the
+    Spark application instead — reused within one app, fresh in the next
+    (a cluster deployment would fold in a Hadoop FileSystem listing)."""
+    if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", sf_dir):
+        return ("__non_local_path__", spark.sparkContext.applicationId)
+
+    path = os.path.join(sf_dir, "documents.parquet")
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(path, f) for f in os.listdir(path) if not f.startswith(".")
+        )
+    else:
+        files = [path]
+    out = []
+    for f in files:
+        try:
+            st = os.stat(f)
+            out.append((os.path.basename(f), st.st_size, st.st_mtime_ns))
+        except OSError:
+            out.append((os.path.basename(f), -1, -1))
+    return tuple(out)
+
+
 def _staging_path(spark, sf_dir, name: str) -> str:
     """Warehouse staging dir keyed on (op name, input fingerprint).
 
@@ -120,24 +153,31 @@ def _staging_path(spark, sf_dir, name: str) -> str:
     unchanged input reuses the staged layout, an overwritten
     documents.parquet lands in a fresh dir instead of invalidating any
     live reader of the old one."""
-    import hashlib
-
-    from glre_spark.operators.kgops import _input_fingerprint
-
     key = hashlib.md5(
-        repr((sf_dir, _input_fingerprint(sf_dir))).encode()
+        repr((sf_dir, _input_fingerprint(spark, sf_dir))).encode()
     ).hexdigest()[:12]
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     return f"{wh}/{name}_{key}"
 
 
 def _ensure_staged(path: str, write_fn) -> str:
-    """Run the staging write only when the layout is not already there
-    (the _SUCCESS marker gates a complete committed write)."""
-    import os
+    """Run the staging write only when the layout is not already there.
 
+    The write goes to a private ``<path>.tmp-<uuid>`` dir that is then
+    renamed onto ``path``: a directory rename is atomic, so ``path`` only
+    ever appears complete, and two writers racing on one warehouse (two
+    threads or two apps) cannot interleave part files. The loser's rename
+    fails on the winner's non-empty dir; it deletes its own copy and uses
+    the winner's, which holds the same content."""
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_fn(path)
+        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+        write_fn(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.exists(os.path.join(path, "_SUCCESS")):
+                raise  # not a lost race: something else occupies path
     return path
 
 

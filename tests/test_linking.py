@@ -4,16 +4,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from glre_spark import minhash as mh
 from glre_spark.linking import (
+    NAME_ROWS_PER_BAND,
     alias_dict_df,
-    candidate_pairs,
     connected_components,
     dedup_triples,
     link_aliases,
     link_aliases_salted,
-    lsh_bands,
-    minhash_signature,
-    shingles,
 )
 
 
@@ -68,12 +66,38 @@ def test_minhash_lsh_finds_near_duplicates(spark):
         (4, base.replace("quick", "quik")),        # near-dup of 1
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    sig = df.select("id", minhash_signature(shingles(F.col("text"))).alias("sig"))
-    bands = sig.select("id", F.explode(lsh_bands(F.col("sig"))).alias("band"))
-    pairs = {(r.id_a, r.id_b) for r in candidate_pairs(bands, "id").collect()}
+    hs = df.select("id", mh.shingle_hashes(mh.shingles(F.col("text"))).alias("hs"))
+    sig = hs.select("id", *mh.signature(F.col("hs")))
+    bands = mh.lsh_bands(sig, NAME_ROWS_PER_BAND, id_col="id")
+    pairs = {(r.id_a, r.id_b) for r in mh.capped_pairs(bands, id_col="id").collect()}
     assert (1, 2) in pairs
     assert (1, 4) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs and (3, 4) not in pairs
+
+
+def test_hot_lsh_bucket_is_capped_but_mirrors_still_flagged(spark):
+    """More than MAX_LSH_BLOCK byte-identical docs share every band
+    bucket: the capped self-join must emit no pair from that bucket (the
+    quadratic guard), and near_dup_keepers must still flag every mirror
+    through its linear exact-content star."""
+    from glre_spark.operators.kgops import near_dup_keepers
+
+    n_hot = mh.MAX_LSH_BLOCK + 6
+    hot = "the same boilerplate page mirrored across many hosts, word for word"
+    rows = [(i, hot) for i in range(n_hot)] + [
+        (1000, "an unrelated page about graph neural networks and relations"),
+        (1001, "a second unrelated page on spark dataframes and shuffles"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    hs = docs.select("doc_id", mh.shingle_hashes(mh.shingles(F.col("text"))).alias("hs"))
+    sig = hs.select("doc_id", *mh.signature(F.col("hs")))
+    pairs = mh.capped_pairs(mh.lsh_bands(sig, mh.DOC_ROWS_PER_BAND)).collect()
+    assert not [p for p in pairs if p.id_a < n_hot and p.id_b < n_hot]
+
+    keep = {r.doc_id: (r.keeper, r.is_dup) for r in near_dup_keepers(docs).collect()}
+    assert all(keep[i] == (0, True) for i in range(1, n_hot))
+    assert keep[0] == (0, False)
+    assert keep[1000] == (1000, False) and keep[1001] == (1001, False)
 
 
 def test_connected_components_min_label(spark):

@@ -381,3 +381,41 @@ def test_staged_pruning_ops_do_not_invalidate_each_other(spark):
     pp(spark, SF_DIR)  # re-build; must not invalidate df_dpp below
     assert df_dpp.count() > 0
     assert df_pp.count() > 0
+
+
+def test_concurrent_staging_writes_rename_into_place(spark):
+    """Two threads staging the same fresh layout at once: each writes a
+    private temp dir and renames it onto the staging path; the loser
+    keeps the winner's layout. Both DataFrames read the same rows, and no
+    temp dir is left behind."""
+    import glob
+    import shutil
+    import threading
+    import uuid
+
+    from glre_spark.operators.scans import lang_partitioned_path
+
+    name = f"docs_by_lang_race_{uuid.uuid4().hex[:8]}"
+    paths, errors = [], []
+
+    def stage():
+        try:
+            paths.append(lang_partitioned_path(spark, SF_DIR, name=name))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=stage) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(paths) == 2 and paths[0] == paths[1]
+    rows = [
+        sorted(map(tuple, spark.read.parquet(p).select("doc_id", "lang").collect()))
+        for p in paths
+    ]
+    assert rows[0] and rows[0] == rows[1]
+    assert not glob.glob(f"{paths[0]}.tmp-*")
+    shutil.rmtree(paths[0])
