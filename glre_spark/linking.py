@@ -8,7 +8,7 @@ naming, triple dedup. All built-in DataFrame ops — no Python in the path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from glre_spark import minhash as mh
@@ -95,7 +95,9 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     under ANSI on strings). A pre-fixpoint false stop needs the
     per-round hash sums to collide — 2^-64-ish per round, negligible.
     Summed as decimal(38,0): a bigint sum of 64-bit hashes could
-    overflow under ANSI; decimal38 cannot at any realistic node count."""
+    overflow under ANSI; decimal38 cannot at any realistic node count.
+    The sum rides an Observation on the round's checkpoint pass, so the
+    probe costs no job of its own."""
     import warnings
 
     sym = edges.select(
@@ -103,7 +105,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     ).unionByName(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
     sym = sym.localCheckpoint(eager=True)  # compute candidate edges once
     nodes = sym.select(F.col("src").alias("id")).distinct()
-    labels = nodes.withColumn("component", F.col("id")).localCheckpoint(eager=True)
+    labels = nodes.withColumn("component", F.col("id"))  # round 1 rebuilds it
     prev_sum = None
     converged = False
     for _ in range(max_iter):
@@ -120,14 +122,15 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         lut = prop.select(
             F.col("id").alias("_cid"), F.col("component").alias("_cnew")
         )
+        probe = Observation()
         labels = (
             prop.join(lut, prop.component == lut._cid)
             .select("id", F.col("_cnew").alias("component"))
+            .observe(probe, F.sum(
+                F.xxhash64("id", "component").cast("decimal(38,0)")).alias("h"))
             .localCheckpoint(eager=True)  # truncate lineage, one execution
         )
-        s = labels.agg(
-            F.sum(F.xxhash64("id", "component").cast("decimal(38,0)"))
-        ).collect()[0][0]
+        s = probe.get["h"]
         if s == prev_sum:
             converged = True
             break

@@ -432,9 +432,7 @@ def near_dup_keepers(
         # local analog of "write the signature table once, then join")
         hs = hs.localCheckpoint(eager=True)
     sig = hs.select("doc_id", *mh.signature(F.col("hs")))
-    cand = mh.capped_pairs(
-        mh.lsh_bands(sig, mh.DOC_ROWS_PER_BAND), max_block=max_block
-    ).distinct()
+    cand = mh.capped_pairs(mh.lsh_bands(sig, mh.DOC_ROWS_PER_BAND), max_block=max_block)
     # Exact-content star candidates: byte-identical docs (the web's
     # dominant duplication mode — mirrors) grouped by md5(text) and paired
     # to the group's min doc_id. An exact-dup group is an equivalence
@@ -460,7 +458,7 @@ def near_dup_keepers(
         .filter(F.col("doc_id") != F.col("id_a"))
         .select("id_a", F.col("doc_id").alias("id_b"))
     )
-    cand = cand.unionByName(star).distinct()
+    cand = cand.unionByName(star).distinct()  # dedups band and star pairs at once
     if sketch_k:
         sh = hs.select(
             "doc_id", F.slice(F.array_sort("hs"), 1, sketch_k).alias("sh")

@@ -199,6 +199,11 @@ def build_triples(spark: SparkSession, pages: DataFrame,
     triples = predictions_to_triples(preds, alias_dict_df(spark), group_col=group_col)
     deduped = dedup_triples(triples, extra_keys=[group_col] if group_col else [])
     if cluster_entities:
+        # localCheckpoint: two consumers — cluster_names (whose
+        # connected-components rounds are eager actions) and
+        # apply_name_clusters both read the linked triples; unmaterialized,
+        # each would rerun inference and alias linking (and the keeper pass).
+        deduped = deduped.localCheckpoint(eager=True)
         names = deduped.select(F.col("subj").alias("name"), F.col("n_sources")).unionByName(
             deduped.select(F.col("obj").alias("name"), F.col("n_sources"))
         )

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import threading
+import warnings
+
+import pytest
 from pyspark.sql import functions as F
 
 from glre_spark import minhash as mh
@@ -106,6 +110,41 @@ def test_connected_components_min_label(spark):
     )
     got = {r.id: r.component for r in connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
+
+
+def _chain(spark, n_nodes=201):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n_nodes - 1)], "id_a long, id_b long"
+    )
+
+
+def test_connected_components_warns_without_fixpoint(spark):
+    """The per-round probe must still see the labels change: two rounds
+    cannot reach and confirm the fixpoint of a 201-node chain."""
+    with pytest.warns(RuntimeWarning, match="no fixpoint"):
+        connected_components(_chain(spark), max_iter=2)
+
+
+def test_connected_components_long_chain_converges_silently(spark):
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = connected_components(_chain(spark)).collect()
+    assert len(got) == 201
+    assert {r.component for r in got} == {0}
+
+
+def test_connected_components_empty_edges_returns_empty(spark):
+    """No edges → no labels. The probe's Observation must still complete
+    on an empty checkpoint pass instead of blocking forever."""
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    out = []
+    t = threading.Thread(
+        target=lambda: out.append(connected_components(empty).collect()), daemon=True
+    )
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "connected_components hung on an empty edge frame"
+    assert out == [[]]
 
 
 def test_dedup_triples_keeps_max_score(spark):

@@ -133,6 +133,37 @@ def test_keeper_semi_join_below_inference_stage(spark):
     )
 
 
+def test_clustered_build_materializes_linked_triples_once(spark):
+    """cluster_entities: cluster_names and apply_name_clusters both read
+    the linked triples, so build_triples materializes them at that fork.
+    The final plan then starts from that checkpoint with no Python stage
+    left to rerun, and its rows equal the layer-by-layer composition."""
+    from glre_spark.datagen import pages_df
+    from glre_spark.inference import broadcast_weights, infer_stage_agg
+    from glre_spark.linking import (
+        alias_dict_df, apply_name_clusters, cluster_names, dedup_triples,
+    )
+    from glre_spark.pipeline import build_triples, predictions_to_triples, prepare_pages
+
+    pages = pages_df(spark, 40, partitions=2)
+    df = build_triples(spark, pages, cluster_entities=True)
+    assert "MapInPandas" not in plan_of(df)
+
+    preds = infer_stage_agg(
+        prepare_pages(pages), weights_bc=broadcast_weights(spark), extract_html=True
+    )
+    linked = dedup_triples(
+        predictions_to_triples(preds, alias_dict_df(spark))
+    ).localCheckpoint(eager=True)
+    names = linked.select(F.col("subj").alias("name"), "n_sources").unionByName(
+        linked.select(F.col("obj").alias("name"), "n_sources")
+    )
+    want = apply_name_clusters(linked, cluster_names(names, weight_col="n_sources"))
+    got = df.collect()
+    assert got
+    assert sorted(got) == sorted(want.select(*df.columns).collect())
+
+
 def test_repetition_score_has_no_shuffle(spark):
     """The Gopher-rules repetition stats are a pure per-row map (sorted-
     array run-length scan) — the plan must contain NO Exchange at all;
