@@ -1,7 +1,7 @@
-"""Entity linking & canonicalization (SURVEY.md §2.12).
+"""Entity linking (SURVEY.md §2.12).
 
-Relational stages downstream of inference: name normalization, (salted)
-broadcast alias-dictionary join, near-duplicate name clustering (blocked
+Relational stages downstream of inference: name normalization, broadcast
+alias-dictionary join, near-duplicate name clustering (blocked
 by the shared glre_spark.minhash stack), connected components, canonical
 naming, triple dedup. All built-in DataFrame ops — no Python in the path.
 """
@@ -36,40 +36,21 @@ def alias_dict_df(spark) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Alias joins (link_alias_broadcast / join_salted_skew)
+# Alias join (link_alias_broadcast)
 # ---------------------------------------------------------------------------
 
 
-def link_aliases(mentions: DataFrame, alias_df: DataFrame, name_col: str = "name") -> DataFrame:
-    """Broadcast hash join mention names onto the alias dictionary.
+def link_aliases(mentions: DataFrame, alias_df: DataFrame) -> DataFrame:
+    """Broadcast hash join mention ``name``s onto the alias dictionary.
     Unlinked names fall back to a deterministic surrogate key so every
-    mention stays in the graph."""
-    m = mentions.withColumn("alias_norm", norm_name(F.col(name_col)))
+    mention stays in the graph. The dictionary is broadcast, so no
+    mention rows are shuffled and a hot name cannot skew a task."""
+    m = mentions.withColumn("alias_norm", norm_name(F.col("name")))
     joined = m.join(F.broadcast(alias_df), "alias_norm", "left")
     return joined.withColumn(
         "entity_key",
         F.coalesce(F.col("entity_key"), F.concat(F.lit("S"), F.md5("alias_norm"))),
-    ).withColumn("canonical_name", F.coalesce(F.col("canonical_name"), F.col(name_col)))
-
-
-def link_aliases_salted(
-    mentions: DataFrame, alias_df: DataFrame, name_col: str = "name", salt_buckets: int = 16
-) -> DataFrame:
-    """Salted variant for hot keys (head entities, BASELINE.json north_star):
-    fact side gets a url-hash salt; the dictionary is replicated ×N via
-    explode(sequence(...)). Result ≡ the plain join (property-tested)."""
-    m = mentions.withColumn("alias_norm", norm_name(F.col(name_col))).withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col("url"), F.col(name_col)), F.lit(salt_buckets)).cast("int"),
-    )
-    dict_rep = alias_df.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    joined = m.join(F.broadcast(dict_rep), ["alias_norm", "_salt"], "left").drop("_salt")
-    return joined.withColumn(
-        "entity_key",
-        F.coalesce(F.col("entity_key"), F.concat(F.lit("S"), F.md5("alias_norm"))),
-    ).withColumn("canonical_name", F.coalesce(F.col("canonical_name"), F.col(name_col)))
+    ).withColumn("canonical_name", F.coalesce(F.col("canonical_name"), F.col("name")))
 
 
 # ---------------------------------------------------------------------------
@@ -158,13 +139,9 @@ NAME_ROWS_PER_BAND = 2
 
 
 def cluster_names(
-    names: DataFrame,
-    name_col: str = "name",
-    weight_col: str | None = None,
-    jaccard_threshold: float = 0.85,
-    max_block: int = mh.MAX_LSH_BLOCK,
+    names: DataFrame, weight_col: str, jaccard_threshold: float = 0.85
 ) -> DataFrame:
-    """(name [, weight]) → (name, cluster_name) mapping for near-duplicate
+    """(name, weight) → (name, cluster_name) mapping for near-duplicate
     names. Pure DataFrame ops over the shared glre_spark.minhash stack:
     shingle → MinHash → LSH bands → capped block self-join → Jaccard
     verify → connected components (by hashed name id) → canonical pick
@@ -173,38 +150,32 @@ def cluster_names(
     Node ids are xxhash64(name): fully parallel (a dense_rank over a
     global no-partition window would funnel every distinct name through
     one task) and collision-safe at 64 bits for name-clustering scale."""
-    w = (
-        names.groupBy(name_col).agg(F.sum(weight_col).alias("_w"))
-        if weight_col
-        else names.select(name_col).distinct().withColumn("_w", F.lit(1))
-    )
+    w = names.groupBy("name").agg(F.sum(weight_col).alias("_w"))
     ided = w.withColumn(
-        "_id", F.xxhash64(F.col(name_col))
-    ).withColumn("_sh", mh.shingles(norm_name(F.col(name_col))))
+        "_id", F.xxhash64(F.col("name"))
+    ).withColumn("_sh", mh.shingles(norm_name(F.col("name"))))
     hs = ided.select("_id", "_sh", mh.shingle_hashes(F.col("_sh")).alias("_hs"))
     sig = hs.select("_id", "_sh", *mh.signature(F.col("_hs")))
     bands = mh.lsh_bands(sig, NAME_ROWS_PER_BAND, id_col="_id", carry="_sh")
     pairs = (
-        mh.capped_pairs(bands, id_col="_id", carry="_sh", max_block=max_block)
+        mh.capped_pairs(bands, id_col="_id", carry="_sh")
         .filter(mh.jaccard("_sh_a", "_sh_b") >= jaccard_threshold)
         .select("id_a", "id_b")
         .distinct()
     )
     comps = connected_components(pairs)  # only ids that appear in edges
     labeled = ided.join(comps, ided._id == comps.id, "left").select(
-        F.col(name_col),
+        F.col("name"),
         F.col("_w"),
         F.coalesce(F.col("component"), F.col("_id")).alias("_comp"),
     )
-    wrep = Window.partitionBy("_comp").orderBy(F.desc("_w"), F.asc(name_col))
+    wrep = Window.partitionBy("_comp").orderBy(F.desc("_w"), F.asc("name"))
     reps = (
         labeled.withColumn("_rk", F.row_number().over(wrep))
         .filter("_rk = 1")
-        .select("_comp", F.col(name_col).alias("cluster_name"))
+        .select("_comp", F.col("name").alias("cluster_name"))
     )
-    return labeled.join(reps, "_comp").select(
-        F.col(name_col).alias("name"), F.col("cluster_name")
-    )
+    return labeled.join(reps, "_comp").select("name", "cluster_name")
 
 
 def apply_name_clusters(triples: DataFrame, mapping: DataFrame) -> DataFrame:
@@ -225,27 +196,15 @@ def apply_name_clusters(triples: DataFrame, mapping: DataFrame) -> DataFrame:
             F.coalesce("_obj_c", "obj").alias("obj"),
             F.col("score"),
             F.col("url"),
-            F.col("n_sources").alias("n_pred_rows"),
+            F.col("n_sources"),
         )
     )
     return dedup_triples(out)
 
 
 # ---------------------------------------------------------------------------
-# Canonical naming + triple dedup (§2.12)
+# Triple dedup (§2.12)
 # ---------------------------------------------------------------------------
-
-
-def canonicalize(named: DataFrame, cluster_col: str = "component", name_col: str = "canonical_name") -> DataFrame:
-    """Pick the canonical name per cluster: most frequent, tie → lexicographic
-    smallest (max_by over (count, reversed-name ordering) via window)."""
-    counts = named.groupBy(cluster_col, name_col).agg(F.count("*").alias("cnt"))
-    w = Window.partitionBy(cluster_col).orderBy(F.desc("cnt"), F.asc(name_col))
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(F.col(cluster_col), F.col(name_col).alias("cluster_name"))
-    )
 
 
 def dedup_triples(triples: DataFrame, extra_keys: list[str] | None = None) -> DataFrame:

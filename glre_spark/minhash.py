@@ -6,6 +6,8 @@ permutations → banded (id, band_id, band_hash) rows → a block-capped
 self-join → exact Jaccard verify. Document near-dup dedup
 (operators.kgops) and entity-name clustering (linking.cluster_names) both
 block through here; the only thing they choose is ``rows_per_band``.
+Embedding near-dup dedup (kgops.dedup_embedding_cosine) reuses the capped
+self-join over its sign-LSH buckets with a larger ``max_block``.
 
 Every step is exact md5 / int64 arithmetic both engines agree on, so the
 DuckDB CTEs at the bottom reproduce the document signatures, bands and

@@ -375,17 +375,15 @@ def dedup_keeper_table(spark, sf_dir):
     )
 
 
-def near_dup_keepers(
-    docs, tau: float = _KEEPER_TAU, max_block: int = mh.MAX_LSH_BLOCK,
-    sketch_k: int | None = None, check_ids: bool = True,
-):
+def near_dup_keepers(docs, sketch_k: int | None = None, check_ids: bool = True):
     """dedup_keeper_table's decision generalized to an ARBITRARY
     (doc_id bigint, text string) DataFrame — no sf_dir — so the
     flagship pipeline can compose it below its inference stage
     (pipeline.build_triples(drop_near_dups=True)). Same machinery end to
-    end: MinHash → capped LSH blocks → Jaccard ≥ τ verify → connected
-    components → (doc_id, keeper, is_dup), min-id keeper. Zero Python
-    stages; every join is bounded by the block cap, never all-pairs.
+    end: MinHash → capped LSH blocks → Jaccard ≥ τ (_KEEPER_TAU) verify →
+    connected components → (doc_id, keeper, is_dup), min-id keeper. Zero
+    Python stages; every join is bounded by the block cap, never
+    all-pairs.
 
     ``sketch_k`` trades exact verify for scale: with it set, BOTH the
     signatures and the verify run off ONE materialized distinct-shingle-
@@ -432,7 +430,7 @@ def near_dup_keepers(
         # local analog of "write the signature table once, then join")
         hs = hs.localCheckpoint(eager=True)
     sig = hs.select("doc_id", *mh.signature(F.col("hs")))
-    cand = mh.capped_pairs(mh.lsh_bands(sig, mh.DOC_ROWS_PER_BAND), max_block=max_block)
+    cand = mh.capped_pairs(mh.lsh_bands(sig, mh.DOC_ROWS_PER_BAND))
     # Exact-content star candidates: byte-identical docs (the web's
     # dominant duplication mode — mirrors) grouped by md5(text) and paired
     # to the group's min doc_id. An exact-dup group is an equivalence
@@ -479,7 +477,7 @@ def near_dup_keepers(
         jac = F.size(F.array_intersect(both, union_k)).cast("double") / denom
     else:
         jac = mh.jaccard("sh_a", "sh_b")
-    ver = paired.filter(jac >= tau).select("id_a", "id_b")
+    ver = paired.filter(jac >= _KEEPER_TAU).select("id_a", "id_b")
     comps = connected_components(ver)
     ids = docs.select("doc_id")
     return ids.join(comps, ids.doc_id == comps.id, "left").select(
@@ -491,7 +489,7 @@ def near_dup_keepers(
     )
 
 
-_SKETCH_K = 256  # bottom-k (KMV) sketch size for the scale-shaped verify
+SKETCH_K = 256  # bottom-k (KMV) sketch size for the scale-shaped verify
 
 
 @op(
@@ -515,7 +513,7 @@ allc AS (
   SELECT id_a, id_b FROM star
 ),
 sk AS MATERIALIZED (
-  SELECT doc_id, list_slice(list_sort(list(h)), 1, {_SKETCH_K}) AS sh
+  SELECT doc_id, list_slice(list_sort(list(h)), 1, {SKETCH_K}) AS sh
   FROM sh GROUP BY doc_id
 ),
 ver AS MATERIALIZED (
@@ -526,8 +524,8 @@ ver AS MATERIALIZED (
   WHERE CAST(len(list_intersect(
                list_intersect(a.sh, b.sh),
                list_slice(list_sort(list_distinct(list_concat(a.sh, b.sh))),
-                          1, {_SKETCH_K}))) AS DOUBLE)
-        / least({_SKETCH_K}, len(list_distinct(list_concat(a.sh, b.sh))))
+                          1, {SKETCH_K}))) AS DOUBLE)
+        / least({SKETCH_K}, len(list_distinct(list_concat(a.sh, b.sh))))
         >= {_KEEPER_TAU}
 ),
 edges AS (
@@ -560,7 +558,22 @@ def dedup_keeper_sketch(spark, sf_dir):
     table — the KMV estimator itself is cross-checked, not just row
     counts (VERDICT r5 next-round #4)."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return near_dup_keepers(docs, sketch_k=_SKETCH_K)
+    return near_dup_keepers(docs, sketch_k=SKETCH_K)
+
+
+def _cosine(a, b):
+    """Cosine of two numeric array columns, rounded like every op (fround
+    to 4 places). Dot/norms via zip_with + aggregate (JVM-side
+    higher-order fns, no UDF)."""
+
+    def dot(x, y):
+        return F.aggregate(
+            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+
+    return fround(dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b))), 4)
 
 
 _ANN_CTES = """q AS (
@@ -590,26 +603,13 @@ FROM pr WHERE vec_id <> 0
 ORDER BY cos_sim DESC, vec_id LIMIT 10""",
 )
 def ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-k vs vec 0 — the ANN baseline. Dot/norms via
-    zip_with + aggregate (JVM-side higher-order fns, no UDF)."""
+    """Brute-force cosine top-k vs vec 0 — the ANN baseline."""
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter("vec_id = 0").select(F.col("embedding").alias("qe"))
     joined = fan_out(emb.filter("vec_id <> 0")).crossJoin(F.broadcast(q))
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cos = fround(
-        dot(F.col("embedding"), F.col("qe"))
-        / (F.sqrt(dot(F.col("embedding"), F.col("embedding"))) * F.sqrt(dot(F.col("qe"), F.col("qe")))),
-        4,
-    )
     return (
-        joined.select("vec_id", cos.alias("cos_sim"))
+        joined.select("vec_id", _cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
     )
@@ -692,6 +692,14 @@ def _topk_table_planes(tbl: int) -> list[list[int]]:
     return _TOPK_PLANES[tbl * _LSH_BITS : (tbl + 1) * _LSH_BITS]
 
 
+def _table_buckets():
+    """posexplode → (table, bucket): one row per vector per sign-LSH table
+    (the plane family ann_lsh_topk and dedup_embedding_cosine share)."""
+    return F.posexplode(
+        F.array(*[_bucket_col(_topk_table_planes(t)) for t in range(_LSH_L)])
+    )
+
+
 @op(
     "ann_lsh_topk",
     "WITH b AS (SELECT vec_id, "
@@ -731,12 +739,7 @@ def ann_lsh_topk(spark, sf_dir):
     Recall vs the ann_cosine_topk brute force is asserted ≥ 0.8 in
     tests/test_ann.py."""
     emb = load(spark, sf_dir, "embeddings")
-    buckets = fan_out(emb).select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[_bucket_col(_topk_table_planes(t)) for t in range(_LSH_L)])
-        ).alias("tbl", "bkt"),
-    )
+    buckets = fan_out(emb).select("vec_id", _table_buckets().alias("tbl", "bkt"))
     qb = buckets.filter(F.col("vec_id") == 0).select(
         F.col("tbl").alias("qtbl"), F.col("bkt").alias("qbkt")
     )
@@ -752,23 +755,8 @@ def ann_lsh_topk(spark, sf_dir):
     q = emb.filter("vec_id = 0").select(F.col("embedding").alias("qe"))
     joined = emb.join(cand, "vec_id").crossJoin(F.broadcast(q))
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cos = fround(
-        dot(F.col("embedding"), F.col("qe"))
-        / (
-            F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-            * F.sqrt(dot(F.col("qe"), F.col("qe")))
-        ),
-        4,
-    )
     return (
-        joined.select("vec_id", cos.alias("cos_sim"))
+        joined.select("vec_id", _cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
     )
@@ -831,46 +819,16 @@ def dedup_embedding_cosine(spark, sf_dir):
     (1 − θ/π)³ ≈ 0.25 → ≈0.9 recall over the 8 tables (same plane family
     as ann_lsh_topk)."""
     emb = load(spark, sf_dir, "embeddings")
-    buckets = fan_out(emb).select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[_bucket_col(_topk_table_planes(t)) for t in range(_LSH_L)])
-        ).alias("tbl", "bkt"),
-    )
-    sized = (
-        buckets.groupBy("tbl", "bkt")
-        .agg(F.count("*").alias("bn"))
-        .filter(F.col("bn") <= _EDUP_CAP)
-        .select("tbl", "bkt")
-    )
-    capped = buckets.join(F.broadcast(sized), ["tbl", "bkt"])
-    a = capped.select(F.col("vec_id").alias("id_a"), "tbl", "bkt")
-    c = capped.select(F.col("vec_id").alias("id_b"), "tbl", "bkt")
-    cand = (
-        a.join(c, ["tbl", "bkt"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+    # the capped (table, bucket) self-join is minhash's, with a larger cap
+    bands = fan_out(emb).select("vec_id", _table_buckets().alias("band_id", "band_hash"))
+    cand = mh.capped_pairs(bands, id_col="vec_id", max_block=_EDUP_CAP).distinct()
 
     ea = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     eb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    cos = fround(
-        dot(F.col("va"), F.col("vb"))
-        / (F.sqrt(dot(F.col("va"), F.col("va"))) * F.sqrt(dot(F.col("vb"), F.col("vb")))),
-        4,
-    )
     return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
-        .select("id_a", "id_b", cos.alias("cos_sim"))
+        .select("id_a", "id_b", _cosine(F.col("va"), F.col("vb")).alias("cos_sim"))
         .filter(F.col("cos_sim") >= _EDUP_THRESH)
     )
 
@@ -992,23 +950,8 @@ def ann_ivf_topk(spark, sf_dir):
     q = emb.filter("vec_id = 0").select(F.col("embedding").alias("qe"))
     joined = cand.crossJoin(F.broadcast(q))
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cos = fround(
-        dot(F.col("embedding"), F.col("qe"))
-        / (
-            F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-            * F.sqrt(dot(F.col("qe"), F.col("qe")))
-        ),
-        4,
-    )
     return (
-        joined.select("vec_id", cos.alias("cos_sim"))
+        joined.select("vec_id", _cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
     )

@@ -2,7 +2,7 @@
 
 scan_pages → filter_lang → as-of dedup (latest crawl per url) →
 repartition on url-hash → extract_text (byte-identical invariant) →
-mapInPandas GLRE inference → entity linking (broadcast/salted alias join)
+mapInPandas GLRE inference → entity linking (broadcast alias join)
 → triple assembly → exact dedup.
 
 Everything before/after the single Arrow UDF stage is declarative
@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from glre_spark.inference import broadcast_weights
 from glre_spark.linking import alias_dict_df, dedup_triples, link_aliases
 
+LANG = "en"  # the admission filter's language
 MAX_DOC_CHARS = 100_000
 URL_BUCKETS = 1024  # deterministic lineage buckets, decoupled from task count
 
@@ -50,35 +51,30 @@ def latest_per_url(pages: DataFrame) -> DataFrame:
     )
 
 
-def eligible_pages(pages: DataFrame, lang: str = "en") -> DataFrame:
+def eligible_pages(pages: DataFrame) -> DataFrame:
     """The pipeline's admission filter (filter_lang + filter_len), factored
     out so the streaming crawl registry applies EXACTLY the same rule: a
     crawl excluded here must not count as a url's latest version."""
-    return pages.filter(F.col("lang") == lang).filter(
+    return pages.filter(F.col("lang") == LANG).filter(
         F.length("text").between(1, MAX_DOC_CHARS)
     )
 
 
-def prepare_pages(pages: DataFrame, lang: str = "en", use_extractor: bool = True,
-                  partitions: int | None = None,
+def prepare_pages(pages: DataFrame, use_extractor: bool = True,
                   carry_cols: list[str] | None = None) -> DataFrame:
     """Filter, dedup recrawls, repartition on url-hash. Text extraction is
     NOT done here — it is fused into the inference Arrow stage
-    (inference.infer_stage(extract_html=True)) so the pipeline has exactly
+    (inference.infer_stage_agg(extract_html=True)) so the pipeline has exactly
     one Python stage. With ``use_extractor`` the html column is carried
     through; otherwise the trusted text column is (and html is pruned from
     the scan by Catalyst)."""
-    df = latest_per_url(eligible_pages(pages, lang))
+    df = latest_per_url(eligible_pages(pages))
     # latest_per_url's aggregation already exchanged rows by hash(url) —
     # that IS the explicit url-hash partitioning the north rule asks for. A second
     # repartition("bucket") here would re-shuffle the fat html rows for
     # nothing; `bucket` stays as the deterministic lineage-key COLUMN
-    # (resume filtering), decoupled from physical task count. Pass
-    # ``partitions`` only to force a different fan-out (e.g. tiny corpus on
-    # a big cluster).
+    # (resume filtering), decoupled from physical task count.
     df = df.withColumn("bucket", url_bucket())
-    if partitions:
-        df = df.repartition(partitions, "bucket")
     payload = "html" if use_extractor else "text"
     return df.select("url", "warc_ts", payload, "lang", "bucket", *(carry_cols or []))
 
@@ -95,18 +91,12 @@ def predictions_to_triples(
     surface-triple space, so the two broadcast joins (and their per-row
     normalization regexes) run on the collapsed table, not the stream."""
     keys = ["h_name", "r", "t_name"] + ([group_col] if group_col else [])
-    if "n_pred_rows" in preds.columns:  # already partition-aggregated in-stage
-        agg = preds.groupBy(*keys).agg(
-            F.max("score").alias("score"),
-            F.min("url").alias("url"),
-            F.sum("n_pred_rows").alias("n_pred_rows"),
-        )
-    else:
-        agg = preds.groupBy(*keys).agg(
-            F.max("score").alias("score"),
-            F.min("url").alias("url"),
-            F.count("*").alias("n_pred_rows"),
-        )
+    # preds are infer_stage_agg's per-partition aggregates: sum their counts
+    agg = preds.groupBy(*keys).agg(
+        F.max("score").alias("score"),
+        F.min("url").alias("url"),
+        F.sum("n_pred_rows").alias("n_pred_rows"),
+    )
     carry = [F.col(group_col)] if group_col else []
     linked_h = link_aliases(
         agg.withColumnRenamed("h_name", "name"), alias_df
@@ -125,10 +115,9 @@ def predictions_to_triples(
 
 
 def build_triples(spark: SparkSession, pages: DataFrame,
-                  use_extractor: bool = True, partitions: int | None = None,
+                  use_extractor: bool = True,
                   cluster_entities: bool = False,
                   group_col: str | None = None,
-                  group_type: str = "int",
                   drop_near_dups: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → deduped triples.
 
@@ -138,10 +127,12 @@ def build_triples(spark: SparkSession, pages: DataFrame,
     benches because the dictionary already canonicalizes this corpus.
 
     ``group_col`` names a column on ``pages`` (lineage bucket_group int,
-    or the streaming crawl_key string — ``group_type`` gives its Spark
-    type): dedup becomes group-scoped and the column rides to the output
+    or the streaming crawl_key string; its Spark type is read from the
+    schema): dedup becomes group-scoped and the column rides to the output
     so the checkpointed run can partition its sink by it in ONE pass and
-    the streaming log can keep crawl granularity.
+    the streaming log can keep crawl granularity. Entity clustering is
+    global (apply_name_clusters re-dedups across groups), so
+    ``cluster_entities=True`` with a ``group_col`` is refused.
 
     ``drop_near_dups=True`` composes the dedup DECISION
     (kgops.near_dup_keepers: MinHash/LSH → Jaccard-verified → connected
@@ -163,12 +154,18 @@ def build_triples(spark: SparkSession, pages: DataFrame,
 
     from glre_spark.inference import infer_stage_agg
 
+    if group_col and cluster_entities:
+        raise ValueError(
+            "cluster_entities=True merges names across all groups and "
+            f"re-dedups globally, so the output would lose group_col="
+            f"{group_col!r}; pass one or the other"
+        )
     docs = prepare_pages(
-        pages, use_extractor=use_extractor, partitions=partitions,
+        pages, use_extractor=use_extractor,
         carry_cols=[group_col] if group_col else [],
     )
     if drop_near_dups:
-        from glre_spark.operators.kgops import near_dup_keepers
+        from glre_spark.operators.kgops import SKETCH_K, near_dup_keepers
 
         content = (
             F.col("html").cast("string") if use_extractor else F.col("text")
@@ -186,7 +183,7 @@ def build_triples(spark: SparkSession, pages: DataFrame,
         ided = docs.localCheckpoint(eager=True)
         keepers = near_dup_keepers(
             ided.select(F.col("url").alias("doc_id"), content.alias("text")),
-            sketch_k=256,
+            sketch_k=SKETCH_K,
         )
         keep_ids = keepers.filter(~F.col("is_dup")).select(
             F.col("doc_id").alias("url")
@@ -194,7 +191,8 @@ def build_triples(spark: SparkSession, pages: DataFrame,
         docs = ided.join(keep_ids, "url", "left_semi")
     preds = infer_stage_agg(
         docs, weights_bc=broadcast_weights(spark), extract_html=use_extractor,
-        group_col=group_col, group_type=group_type,
+        group_col=group_col,
+        group_type=pages.schema[group_col].dataType.simpleString() if group_col else "int",
     )
     triples = predictions_to_triples(preds, alias_dict_df(spark), group_col=group_col)
     deduped = dedup_triples(triples, extra_keys=[group_col] if group_col else [])

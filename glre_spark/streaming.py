@@ -49,17 +49,6 @@ def sliding_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFram
     )
 
 
-def session_aggregate(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    """Per-user session windows (30-min gap) — streaming twin of
-    win_session."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
-    )
-
-
 def dedup_events_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
     """Streaming exact dedup (the §2.13 dedup_exact shape as a stream):
     ``dropDuplicatesWithinWatermark`` keeps the first occurrence of each
@@ -396,7 +385,7 @@ def stream_build_triples(
                     "refusing to merge ambiguous page versions"
                 )
         triples = build_triples(
-            spark, keyed, group_col="crawl_key", group_type="string",
+            spark, keyed, group_col="crawl_key",
             drop_near_dups=(drop_near_dups == "batch_local"),
         )
         (

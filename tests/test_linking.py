@@ -15,7 +15,6 @@ from glre_spark.linking import (
     connected_components,
     dedup_triples,
     link_aliases,
-    link_aliases_salted,
 )
 
 
@@ -27,17 +26,6 @@ def _mentions(spark):
         ("u5", "United States"), ("u5", "new york city"),
     ]
     return spark.createDataFrame(rows, "url string, name string")
-
-
-def test_salted_join_equals_plain_join(spark):
-    """join_salted_skew correctness: salting must never change results."""
-    m = _mentions(spark)
-    ad = alias_dict_df(spark)
-    plain = link_aliases(m, ad).select("url", "name", "entity_key", "canonical_name")
-    salted = link_aliases_salted(m, ad, salt_buckets=7).select(
-        "url", "name", "entity_key", "canonical_name"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 def test_alias_variants_link_to_same_entity(spark):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from glre_spark.datagen import pages_df
 from glre_spark.pipeline import build_triples, latest_per_url, prepare_pages
 
@@ -52,6 +54,31 @@ def test_latest_per_url_dedups_recrawls(spark):
 def test_prepare_pages_filters_lang(spark):
     docs = prepare_pages(pages_df(spark, 100, partitions=4), use_extractor=False)
     assert docs.filter("lang != 'en'").isEmpty()
+
+
+def test_string_group_col_rides_through_as_string(spark):
+    """build_triples reads group_col's Spark type from the pages schema,
+    so a string group column (the streaming crawl_key shape) comes back
+    as a string holding only the input's group values."""
+    from pyspark.sql import functions as F
+
+    pages = pages_df(spark, 40, partitions=2).withColumn(
+        "grp", F.concat(F.lit("g"), (F.length("url") % 3).cast("string"))
+    )
+    triples = build_triples(spark, pages, group_col="grp")
+    assert triples.schema["grp"].dataType.simpleString() == "string"
+    got = {r.grp for r in triples.select("grp").distinct().collect()}
+    assert got and got <= {r.grp for r in pages.select("grp").distinct().collect()}
+
+
+def test_cluster_entities_refuses_group_col(spark):
+    """apply_name_clusters re-dedups globally, which would silently drop
+    group_col from the output, so the combination is refused up front."""
+    from pyspark.sql import functions as F
+
+    pages = pages_df(spark, 10, partitions=1).withColumn("g", F.lit(1))
+    with pytest.raises(ValueError, match="group_col"):
+        build_triples(spark, pages, group_col="g", cluster_entities=True)
 
 
 def test_drop_near_dups_removes_duplicate_page(spark):
