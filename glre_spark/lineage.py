@@ -9,13 +9,16 @@ exact resume. Mechanism (works on plain parquet; Iceberg-ready layout):
 - ONE job per (re)start processes every pending bucket-group: the pages
   source is scanned exactly once, triples are written with dynamic
   partition overwrite on ``bucket_group=`` (idempotent per group), and
-  per-group input counts come from ``df.observe()`` on the same pass — no
-  per-group filter/count re-scans;
+  per-group input AND output counts come from two ``df.observe()``
+  Observations on the same pass — no per-group filter/count re-scans and
+  no read-back of the written partitions;
 - the manifest is appended AFTER the data lands — manifest-last commit
   order means a crash can only lose uncommitted work (whose partitions the
   resume overwrites idempotently), never record phantom work;
-- on restart, ``pending_groups`` left-anti joins the manifest and only
-  missing groups are recomputed (resume_filter op).
+- on restart, ``pending_groups`` collects the manifest's ``done`` group
+  ids and subtracts them from ``range(n_groups)`` on the driver; only
+  missing groups are recomputed (resume_filter op). A missing manifest
+  is an empty Arrow local relation, so a first run reads nothing.
 
 Dedup scope: triples are exact-deduped WITHIN a bucket group (the unit of
 idempotent commit); the same (subj, pred, obj) observed in two groups is
@@ -32,6 +35,8 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from glre_spark.session import local_df
+
 # batch_wall_ms is the wall clock of the WHOLE (re)start batch that
 # committed the row (all groups share one job/pass), not a per-group time.
 MANIFEST_SCHEMA = (
@@ -44,28 +49,24 @@ def manifest_path(base: str) -> str:
     return os.path.join(base, "_manifest")
 
 
-def read_manifest(spark: SparkSession, base: str) -> DataFrame:
-    """Empty manifest ONLY for a missing path (first run). Any other read
-    error (corrupt files, permissions) re-raises: silently reporting zero
-    completed groups would trigger a full-corpus recompute at scale and
-    mask manifest corruption."""
-    from pyspark.errors import AnalysisException
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Hadoop ``FileSystem.exists``: works for local and URI paths alike."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(hpath)
 
+
+def read_manifest(spark: SparkSession, base: str) -> DataFrame:
+    """The manifest, typed MANIFEST_SCHEMA. A missing path (first run) is
+    an empty local relation: no read is attempted, so nothing is logged
+    and no job runs. Any read error of an existing manifest (corrupt
+    files, permissions) surfaces: silently reporting zero completed
+    groups would trigger a full-corpus recompute at scale and mask
+    manifest corruption."""
     path = manifest_path(base)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except AnalysisException as e:
-        # match the error CLASS when the API provides it (stable across
-        # message rewording); fall back to the 3.x/4.x message tokens
-        err_class = ""
-        get_cls = getattr(e, "getErrorClass", None)
-        if callable(get_cls):
-            err_class = get_cls() or ""
-        if "PATH_NOT_FOUND" in err_class or "PATH_NOT_FOUND" in str(e) or (
-            "Path does not exist" in str(e)
-        ):
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
-        raise
+    if not _path_exists(spark, path):
+        return local_df(spark, [], MANIFEST_SCHEMA)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def append_manifest_rows(
@@ -73,7 +74,8 @@ def append_manifest_rows(
     base: str,
     rows: list[tuple[str, int, str, int, int, int]],
 ) -> None:
-    df = spark.createDataFrame(
+    df = local_df(
+        spark,
         rows,
         "run_id string, bucket_group int, status string, input_rows long, "
         "triples long, batch_wall_ms long",
@@ -82,10 +84,22 @@ def append_manifest_rows(
 
 
 def pending_groups(spark: SparkSession, base: str, n_groups: int) -> list[int]:
-    all_groups = spark.range(n_groups).select(F.col("id").cast("int").alias("bucket_group"))
-    done = read_manifest(spark, base).filter("status = 'done'").select("bucket_group")
-    rows = all_groups.join(done, "bucket_group", "left_anti").collect()
-    return sorted(r.bucket_group for r in rows)
+    """Groups in ``range(n_groups)`` with no ``done`` manifest row. The
+    done ids are collected (one row per committed group and run) and
+    subtracted on the driver."""
+    done = {
+        r.bucket_group
+        for r in read_manifest(spark, base)
+        .filter("status = 'done'")
+        .select("bucket_group")
+        .collect()
+    }
+    return [g for g in range(n_groups) if g not in done]
+
+
+def _group_counts(groups: list[int]) -> list:
+    """Per-group row counts ``g<id>``, as Observation metrics."""
+    return [F.count(F.when(F.col("bucket_group") == g, True)).alias(f"g{g}") for g in groups]
 
 
 def _process_groups(
@@ -97,23 +111,19 @@ def _process_groups(
 ) -> None:
     """One Spark job over all ``groups``: filter → build_triples (group-
     scoped dedup, bucket_group carried through the Arrow stage) → dynamic-
-    partition-overwrite write → manifest append. Per-group input counts
-    ride an Observation on the same pass (no extra scan)."""
+    partition-overwrite write → manifest append. Per-group input and
+    output counts ride two Observations on the same pass (no extra scan,
+    no read-back of the written partitions)."""
     from glre_spark.pipeline import build_triples
 
     if not groups:
         return
     t0 = time.time()
     part = pages_g.filter(F.col("bucket_group").isin([int(g) for g in groups]))
-    obs = Observation(f"lineage_{run_id}")
-    part = part.observe(
-        obs,
-        *[
-            F.count(F.when(F.col("bucket_group") == g, True)).alias(f"g{g}")
-            for g in groups
-        ],
-    )
+    obs_in, obs_out = Observation(f"lineage_in_{run_id}"), Observation(f"lineage_out_{run_id}")
+    part = part.observe(obs_in, *_group_counts(groups))
     triples = build_triples(spark, part, group_col="bucket_group")
+    triples = triples.observe(obs_out, *_group_counts(groups))
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
@@ -124,29 +134,13 @@ def _process_groups(
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # No try/except here: Spark 4.1 delivers the observation even when the
-    # input is all-empty (probed: a collapsed/empty plan still yields
+    # No try/except here: Spark 4.1 delivers both observations even when
+    # the input is all-empty (probed: a collapsed/empty plan still yields
     # {'g..': 0} — see tests/test_resume.py::test_obs_failure_propagates).
-    # Swallowing errors would silently commit input_rows=0 to the manifest
+    # Swallowing errors would silently commit zero counts to the manifest
     # on a genuine Py4J/runtime failure — the same silent-miscount shape
     # read_manifest guards against.
-    in_rows = obs.get  # populated by the write action above
-    # per-group output counts from the (small) written triples, one scan;
-    # an all-filtered/empty corpus writes no partition dirs at all, so the
-    # read-back may find an unreadable (schema-less) target → 0-triple groups
-    from pyspark.errors import AnalysisException
-
-    try:
-        out_counts = {
-            r.bucket_group: r.n
-            for r in spark.read.parquet(os.path.join(base, "triples"))
-            .filter(F.col("bucket_group").isin([int(g) for g in groups]))
-            .groupBy("bucket_group")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-    except AnalysisException:
-        out_counts = {}
+    in_rows, out_rows = obs_in.get, obs_out.get  # populated by the write above
     batch_wall_ms = int((time.time() - t0) * 1000)
     append_manifest_rows(
         spark,
@@ -156,8 +150,8 @@ def _process_groups(
                 run_id,
                 int(g),
                 "done",
-                int(in_rows.get(f"g{g}", 0)),
-                int(out_counts.get(g, 0)),
+                int(in_rows[f"g{g}"]),
+                int(out_rows[f"g{g}"]),
                 batch_wall_ms,
             )
             for g in groups

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from glre_spark import minhash as mh
+from glre_spark.session import local_df
 
 # ---------------------------------------------------------------------------
 # Normalization (str_normalize §2.8)
@@ -26,13 +27,16 @@ def norm_name(col):
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 
+# The alias dictionary's columns, as datagen.alias_rows() keys them.
+ALIAS_SCHEMA = "alias_norm string, entity_key string, canonical_name string, type string"
+
+
 def alias_dict_df(spark) -> DataFrame:
+    """The alias dictionary as a local relation: its broadcast starts no
+    Python worker."""
     from glre_spark.datagen import alias_rows
 
-    return spark.createDataFrame(
-        alias_rows(),
-        "alias_norm string, entity_key string, canonical_name string, type string",
-    )
+    return local_df(spark, alias_rows(), ALIAS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

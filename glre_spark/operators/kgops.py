@@ -13,6 +13,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from glre_spark import minhash as mh
+from glre_spark.linking import alias_dict_df
 from glre_spark.operators import fan_out, fround, load, op
 
 # ---------------------------------------------------------------------------
@@ -57,12 +58,7 @@ def _norm_col(c):
 def link_alias_broadcast(spark, sf_dir):
     """Mention names (TPC-H nation names double as LOC mentions) broadcast-
     joined onto the alias dictionary."""
-    from glre_spark.datagen import alias_rows
-
-    alias_df = spark.createDataFrame(
-        alias_rows(),
-        "alias_norm string, entity_key string, canonical_name string, typ string",
-    ).drop("typ")
+    alias_df = alias_dict_df(spark).drop("type")
     m = load(spark, sf_dir, "nation").select(
         "n_nationkey", _norm_col(F.col("n_name")).alias("alias_norm")
     )

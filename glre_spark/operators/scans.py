@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from glre_spark.operators import fround, load, op
+from glre_spark.session import local_df
 
 # Shared Spark/DuckDB derivation of pages from documents (SURVEY.md §3.3).
 PAGES_CTE = """
@@ -216,6 +217,26 @@ def scan_partition_pruned(spark, sf_dir):
     )
 
 
+# The control table scan_dynamic_pruned joins: which languages a run reads.
+LANG_PRIORITY = [("en", 1), ("fr", 2), ("de", 0), ("es", 0), ("zh", 0)]
+
+
+def lang_priority_path(spark) -> str:
+    """Stage LANG_PRIORITY as a parquet control table, keyed on its rows.
+    It lives on disk, as a control table would: a filter over a file scan
+    is the selective predicate dynamic partition pruning keys on, while a
+    filter over an in-memory local relation is folded into the relation
+    at plan time, which leaves DPP nothing to key on."""
+    key = hashlib.md5(repr(LANG_PRIORITY).encode()).hexdigest()[:12]
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    return _ensure_staged(
+        f"{wh}/lang_priority_{key}",
+        lambda p: local_df(spark, LANG_PRIORITY, "lang string, priority int")
+        .coalesce(1)
+        .write.parquet(p),
+    )
+
+
 @op(
     "scan_dynamic_pruned",
     """WITH dim(lang, priority) AS (
@@ -235,10 +256,7 @@ def scan_dynamic_pruned(spark, sf_dir):
     docs = spark.read.parquet(
         lang_partitioned_path(spark, sf_dir, name="docs_by_lang_dpp")
     )
-    dim = spark.createDataFrame(
-        [("en", 1), ("fr", 2), ("de", 0), ("es", 0), ("zh", 0)],
-        "lang string, priority int",
-    )
+    dim = spark.read.parquet(lang_priority_path(spark))
     return (
         docs.join(F.broadcast(dim.filter(F.col("priority") > 0)), "lang")
         .groupBy("lang")

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Docs are fat rows (html binary + full text): keep Arrow batches small so
 # the mapInPandas inference stage stays allocation-bounded (SURVEY.md §4.3).
@@ -93,3 +93,25 @@ def get_spark(
         )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A table the driver builds (``rows``: tuples in DDL column order, or
+    dicts keyed by column name) as an Arrow local relation typed from the
+    DDL string (``int`` → int32, ``bigint`` → int64, ``timestamp`` → UTC
+    micros). The plan is a ``LocalTableScan``: collecting it runs no Spark
+    job, empty or not, and a job that reads it (a broadcast, a write)
+    starts no Python worker. A list, an empty pandas frame or
+    ``sc.emptyRDD()`` plan ``Scan ExistingRDD`` instead, whose job starts
+    Python workers to serialize rows nobody computes."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(schema.names, r, strict=True))
+         for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table)

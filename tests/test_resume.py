@@ -133,3 +133,31 @@ def test_torn_staging_dirs_healed_on_resume(spark, tmp_path):
     got = {tuple(r) for r in read_triples(spark, base).collect()}
     want = {tuple(r) for r in read_triples(spark, straight).collect()}
     assert got == want and len(got) > 0
+
+
+def test_written_manifest_has_manifest_schema(spark, tmp_path):
+    from pyspark.sql.types import IntegerType, StructType
+
+    from glre_spark.lineage import MANIFEST_SCHEMA
+
+    base = str(tmp_path / "run")
+    run_with_checkpoints(spark, pages_df(spark, 10, partitions=1), base, n_groups=2)
+    m = read_manifest(spark, base)
+    assert m.schema == StructType.fromDDL(MANIFEST_SCHEMA)
+    assert m.schema["bucket_group"].dataType == IntegerType()
+    assert sorted(r.bucket_group for r in m.collect()) == [0, 1]
+
+
+def test_pending_groups_subtracts_done_groups(spark, tmp_path):
+    """Groups 0 and 2 are done (2 twice, from two runs); group 1 has only
+    a non-done row, and group 3 none at all."""
+    from glre_spark.lineage import append_manifest_rows
+
+    base = str(tmp_path / "hand")
+    append_manifest_rows(spark, base, [
+        ("r1", 0, "done", 5, 7, 10),
+        ("r1", 2, "done", 5, 7, 10),
+        ("r1", 1, "failed", 5, 0, 10),
+    ])
+    append_manifest_rows(spark, base, [("r2", 2, "done", 5, 7, 20)])
+    assert pending_groups(spark, base, 4) == [1, 3]
